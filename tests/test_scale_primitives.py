@@ -235,20 +235,16 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
     assert n_out == 1
 
 
-def test_materialize_paths_identical(spark, monkeypatch):
-    """r15 (VERDICT r14 #7): the two-level operators' materialization knob
-    (WINGFOIL_SCALE_MATERIALIZE) changes only the physical shape — "local"
-    derives the carry from the checkpointed within-pass, "none" is the
-    fault-tolerant pure-lineage shape that re-aggregates from the source —
-    and BOTH produce identical rows on the exact (decimal) types the
-    graded queries use."""
-    from wingfoil_spark.operators import scale
+def test_two_level_ops_match_naive_global_window(spark):
+    """global_prefix_sum / global_lag equal the naive single-partition
+    ``Window.orderBy(ts, seq)`` sum and lag on exact decimals, over tied
+    timestamps inside a bucket, bucket gaps and an empty leading bucket
+    boundary."""
+    from pyspark.sql import Window
     from wingfoil_spark.operators.scale import global_lag, global_prefix_sum
     from wingfoil_spark.stream import Stream
 
     rows = [
-        # (ts, seq, v) — tied timestamps inside a bucket, bucket gaps,
-        # an empty leading bucket boundary
         (i * 7 % 50 + (0 if i < 60 else 300), i, f"{(i * 13) % 101}.25")
         for i in range(120)
     ]
@@ -256,31 +252,19 @@ def test_materialize_paths_identical(spark, monkeypatch):
         "ts", "seq", F.col("v").cast("decimal(12,2)").alias("v")
     )
     s = Stream(df, ts="ts", seq="seq")
-
-    def run(mode):
-        monkeypatch.setattr(scale, "MATERIALIZE", mode)
-        psum = global_prefix_sum(s, "v", "cum", bucket_width=10).df
-        lag = global_lag(s, "v", "prev", bucket_width=10).df
-        return (
-            sorted(((r["ts"], r["seq"], r["cum"]) for r in psum.collect())),
-            sorted(((r["ts"], r["seq"], r["prev"]) for r in lag.collect())),
-        )
-
-    psum_local, lag_local = run("local")
-    psum_none, lag_none = run("none")
-    assert psum_local == psum_none
-    assert lag_local == lag_none
-    # and the values really are the global-order prefix sum / lag
-    ordered = sorted(rows, key=lambda r: (r[0], r[1]))
-    from decimal import Decimal
-    acc, expect = Decimal(0), {}
-    prev, expect_lag = None, {}
-    for ts, seq, v in ordered:
-        acc += Decimal(v)
-        expect[(ts, seq)] = acc
-        expect_lag[(ts, seq)] = prev
-        prev = Decimal(v)
-    got = {(t, q): c for t, q, c in psum_local}
-    assert got == expect
-    got_lag = {(t, q): (None if p is None else p) for t, q, p in lag_local}
-    assert got_lag == expect_lag
+    w = Window.orderBy("ts", "seq")
+    naive = df.select(
+        "ts",
+        "seq",
+        F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
+        F.lag("v").over(w).alias("prev"),
+    )
+    expect = sorted(
+        (r["ts"], r["seq"], r["cum"], r["prev"]) for r in naive.collect()
+    )
+    psum = global_prefix_sum(s, "v", "cum", bucket_width=10).df
+    lag = global_lag(s, "v", "prev", bucket_width=10).df
+    got = psum.join(lag.select("ts", "seq", "prev"), ["ts", "seq"])
+    assert sorted(
+        (r["ts"], r["seq"], r["cum"], r["prev"]) for r in got.collect()
+    ) == expect

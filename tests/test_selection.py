@@ -519,6 +519,21 @@ def test_selection_scores_plan_one_scan(spark, docs_df):
     assert s.get("sort_merge_joins", 0) == 0, s
 
 
+def test_sql_gram_table_fold_quotes_modulus(spark):
+    """The fold's SQL text takes the modulus as an int literal or a quoted
+    column name, never as raw SQL."""
+    df = spark.createDataFrame(
+        [([0, 1, 5], [1.0, 2.0, 4.0], 3)],
+        "h array<long>, t array<double>, `m``x` int",
+    )
+    by_int = S._sql_gram_table_fold("h", "t", 3)
+    by_col = S._sql_gram_table_fold("h", "t", "m`x")
+    assert "% 3)" in str(by_int) and "`m``x`" in str(by_col)
+    row = df.select(by_int.alias("a"), by_col.alias("b")).first()
+    assert row.a == row.b == 1.0 + 2.0 + 4.0
+    assert "`3) + (1`" in str(S._sql_gram_table_fold("h", "t", "3) + (1"))
+
+
 def test_dsir_lambda_is_dense_array(spark, docs_df):
     """Scale gate: the broadcast λ row must be a DENSE array<double>
     (O(1) bucket indexing in the weight fold) — a MapType λ linear-scans

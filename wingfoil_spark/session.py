@@ -3,6 +3,20 @@
 Scale posture: these defaults are written for a real cluster (AQE on, skew
 join handling, partition-size-targeted shuffles); locally they run the same
 code on ``local[N]``.
+
+Python workers: :func:`get_spark` sets ``spark.python.daemon.module`` to
+``wingfoil_pyworker``, a daemon that runs PySpark's own after wrapping
+``zipimport.zipimporter.invalidate_caches``. Without it every Python task's
+``setup_spark_files`` re-parses ``pyspark.zip`` (1,328 entries) once per
+zip importer, 0.06-0.15 s per task in a quiet process on a 4-vCPU host;
+a ``live_stream`` benchmark micro-batch spent 0.26-0.33 s more in
+``addBatch`` without it. With it an archive is
+re-read only when its stat changed since it was last read. Spark reads the
+conf when it launches the daemon, so :func:`configure_session` on a session
+the driver built cannot install it. ``get_spark`` also puts the module's
+directory on the local workers' ``PYTHONPATH``. Cluster deployments ship
+``wingfoil_pyworker.py`` alongside ``wingfoil_spark``, which workers already
+import to unpickle UDF closures.
 """
 
 from __future__ import annotations
@@ -10,6 +24,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+import wingfoil_pyworker
 
 #: SQL confs we need regardless of who built the session. All of these are
 #: runtime-settable, so they can be applied to a driver-provided session.
@@ -68,6 +84,13 @@ def get_spark(app_name: str = "wingfoil_spark", cpus: int | None = None) -> Spar
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.python.daemon.module", "wingfoil_pyworker")
+        # Workers start the daemon (and import wingfoil_spark) from here
+        # whatever the driver's working directory.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.abspath(wingfoil_pyworker.__file__)),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
